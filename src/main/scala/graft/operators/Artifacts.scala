@@ -14,9 +14,11 @@ object Artifacts {
     *    concurrent sessions benching the same fixture never share a path —
     *    an overwrite-mode rewrite cannot delete files another session is
     *    mid-read on;
-    *  - keyed by a sanitized form of the FULL key string plus its md5 (the
-    *    sanitization alone is not injective — "data/sf1" and "data_sf1"
-    *    would collide — so the digest restores one-directory-per-key).
+    *  - named by a readable prefix of the sanitized key plus the md5 of the
+    *    FULL key. The prefix is bounded so the name stays under the 255-byte
+    *    file-name limit however long the corpus path is; the digest carries
+    *    uniqueness (sanitization alone is not injective — "data/sf1" and
+    *    "data_sf1" would collide).
     *
     * The same session calling again with the same key reuses the path —
     * deliberate: bench re-runs overwrite their own artifact, which is part
@@ -26,79 +28,49 @@ object Artifacts {
     * unboundedly).
     */
   def sessionScopedDir(spark: SparkSession, kind: String, key: String): String = {
-    val safe = key.replaceAll("[^A-Za-z0-9._-]", "_")
+    val safe = key.replaceAll("[^A-Za-z0-9._-]", "_").take(MaxKeyPrefix)
     val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val root = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_" + spark.sparkContext.applicationId)
     cleanupOnExit(root)
     new java.io.File(root, s"${kind}_${safe}_$digest").getPath
   }
 
+  private val MaxKeyPrefix = 96
+
   /** Build-at-most-once-per-session serving artifacts (the x82b/x83b/x86c
     * probe rows and the x90 span table): real on-disk indexes a long-lived
     * service holds, so the registered query times the PROBE, not the build
-    * chain. Ordering-safe by construction: whichever registered query (or
-    * spec) asks first builds the artifact inside its own call; later
-    * callers memo-hit. The key folds in [[Caches.planMemoKey]]'s file
-    * fingerprint (name, length, mtime of every corpus file), so a
-    * rewritten corpus misses the memo and rebuilds instead of serving a
-    * stale artifact; an unverifiable fingerprint disables memoization
-    * (rebuild every call — correct, just no longer probe-only). Dir kinds
-    * must be DISTINCT from any full-cycle query's (x82/x83 overwrite their
-    * artifact every run — sharing a path would race a rewrite against a
-    * memo-hit read).
+    * chain. Whichever caller asks first builds the artifact inside its own
+    * call; later callers hit. The memo key folds in the corpus file
+    * fingerprint, so a rewritten corpus rebuilds instead of serving a
+    * stale artifact, and every build writes a FRESH directory — a rebuild
+    * never mutates an artifact an older entry (or a lazily-held probe frame
+    * over it) still serves, and un-memoizable corpora (rebuild every call)
+    * never share a path between concurrent builds. Uncapped: artifacts live
+    * on disk and go with the session root at JVM exit. Dir kinds must be
+    * DISTINCT from any full-cycle query's (x82/x83 overwrite their artifact
+    * every run — sharing a path would race a rewrite against a memo-hit
+    * read).
     */
-  private val servedMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[String]]()
+  private val servedMemo = new Caches.Memo[String]("servedArtifacts", Int.MaxValue)
   private val servedNonce = new java.util.concurrent.atomic.AtomicLong(0L)
 
   private[operators] def servedDir(spark: SparkSession, kind: String,
                                    corpus: DataFrame, fallbackKey: String)
-                                  (build: String => Unit): String = {
-    val pk = Caches.planMemoKey(corpus)
-    // The artifact directory folds in the corpus FINGERPRINT, not just
-    // (kind, sfDir): after an in-place corpus rewrite the new fingerprint
-    // must rebuild into a FRESH path — writing into the old one would
-    // mutate the artifact an earlier memo entry (or a lazily-held probe
-    // frame over it) still serves.
-    def buildAt(suffix: String = ""): String = {
-      val dir = sessionScopedDir(spark, kind, fallbackKey + "|" + pk + suffix)
-      build(dir); dir
+                                  (build: String => Unit): String =
+    servedMemo.memo(corpus, kind) {
+      val dir = sessionScopedDir(spark, kind,
+        fallbackKey + "|build=" + servedNonce.incrementAndGet())
+      build(dir)
+      dir
     }
-    // Unverifiable fingerprint -> no memo entry, so two concurrent callers
-    // would otherwise BOTH build into the same (kind, fallbackKey+"|")
-    // directory and interleave a rewrite with a concurrent read — the
-    // exact hazard the distinct-dirs rule guards against for x82/x83. A
-    // per-call nonce gives every un-memoized build its own directory;
-    // correctness was already "rebuild every call", this just stops the
-    // builds from sharing a path.
-    if (pk.isEmpty) buildAt("|nonce=" + servedNonce.incrementAndGet())
-    else {
-      // Per-key future so the multi-second build never runs while holding
-      // a ConcurrentHashMap bin lock (computeIfAbsent would serialize
-      // unrelated same-bin builds and forbid re-entry): losers of the
-      // putIfAbsent race — and later callers — block on the winner's
-      // future only. A failed build removes its future so the next caller
-      // retries instead of joining a poisoned entry.
-      val fut = new java.util.concurrent.CompletableFuture[String]()
-      val prior = servedMemo.putIfAbsent(kind + "|" + pk, fut)
-      if (prior != null) prior.join()
-      else
-        try { fut.complete(buildAt()); fut.join() }
-        catch {
-          case t: Throwable =>
-            servedMemo.remove(kind + "|" + pk, fut)
-            fut.completeExceptionally(t)
-            throw t
-        }
-    }
-  }
 
-  private val hooked = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val hooked = scala.collection.mutable.Set.empty[String]
 
   private def cleanupOnExit(root: java.io.File): Unit =
-    if (hooked.add(root.getPath))
+    if (hooked.synchronized(hooked.add(root.getPath)))
       Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(root)))
 
   private def deleteRecursively(f: java.io.File): Unit = {

@@ -20,6 +20,9 @@ import org.apache.spark.sql.DataFrame
   * exits, after the body has evaluated whatever it needed. Outside a
   * scope, [[shared]] is exactly `.cache()` — the cache-and-leave default
   * stands for interactive sessions, where the next query is unknown.
+  *
+  * [[Memo]] is the one session memo over file-backed plans; its frame
+  * entries go through the same [[shared]] registration on every hit.
   */
 object Caches {
 
@@ -39,7 +42,10 @@ object Caches {
     * active scope (the registration point), matching who asked for it.
     */
   def shared(df: DataFrame): DataFrame = {
-    df.cache()
+    // skip an already-cached plan: re-caching only logs "Asked to cache
+    // already cached data" and registers nothing new
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    if (df.sparkSession.sharedState.cacheManager.lookupCachedData(df).isEmpty) df.cache()
     register(() => try df.unpersist(blocking = false) catch { case _: Throwable => () })
     df
   }
@@ -99,11 +105,10 @@ object Caches {
   }
 
   /** Memo key for a file-backed plan, or "" when the plan is not safely
-    * memoizable — shared by the JVM-level derived-model memos (the
-    * Duplicates kernel/edge memos, the Bpe merge-table memo). Only plans
-    * whose every leaf is a file relation qualify: a LocalRelation's
-    * canonicalized form omits its data, so two different in-memory corpora
-    * would collide on the same key.
+    * memoizable — the key of every [[Memo]]. Only plans whose every leaf
+    * is a file relation qualify: a LocalRelation's canonicalized form
+    * omits its data, so two different in-memory corpora would collide on
+    * the same key.
     *
     * The key folds in a fingerprint of the underlying FILES (name, length,
     * mtime), not just the root paths: a parquet directory rewritten in
@@ -111,6 +116,15 @@ object Caches {
     * long-lived session would serve stale models forever. Listing the
     * leaves' files is one namenode round-trip — noise next to the
     * computation the memo exists to skip.
+    *
+    * Assumption: a rewrite changes some file's name or length, or lands in
+    * a later mtime granule (milliseconds on HDFS and the local filesystem,
+    * whole seconds on object stores such as S3). Spark's writers name part
+    * files with a fresh job UUID, so their rewrites always change names;
+    * an external tool that rewrites a file in place with the same name and
+    * byte length within one granule of the previous write is NOT detected,
+    * and a memo keyed on it serves the old result until the next
+    * distinguishable write.
     */
   private[operators] def planMemoKey(df: DataFrame): String = {
     val leaves = df.queryExecution.analyzed.collectLeaves()
@@ -155,4 +169,104 @@ object Caches {
         java.lang.Long.toHexString(h)
       }.mkString(","))
     } catch { case _: Throwable => None }
+
+  /** One session memo over file-backed plans: every derived-model and
+    * frame memo in the operators is an instance, so the validity rules
+    * live here once.
+    *
+    *  - Key: `planMemoKey(df) + "|" + params`. An empty plan key (in-memory
+    *    or unlistable input) computes without storing.
+    *  - One computation per key: the first caller installs a future and
+    *    computes with no lock held; concurrent callers of the same key
+    *    wait on that future. A failed computation removes its future, so
+    *    the next caller retries instead of joining a poisoned entry.
+    *  - Eviction: LRU, one entry at a time once `cap` is exceeded. The
+    *    evicted entry's frames are unpersisted and any checkpoint under
+    *    them released.
+    *  - Frame values (a `DataFrame`, or a tuple holding frames next to side
+    *    values such as a dispatch path): a hit misses when the frame
+    *    belongs to another session, and otherwise goes through [[shared]] —
+    *    cached only if CacheManager has lost it, and registered with the
+    *    active [[withScope]]. A frame whose plan reads a checkpoint is never
+    *    stored: scope exit or eviction would release blocks its truncated
+    *    lineage cannot rebuild.
+    */
+  final class Memo[V](name: String, val cap: Int) {
+    private type Entry = java.util.concurrent.CompletableFuture[Option[V]]
+    // access-ordered: iteration starts at the least recently used entry
+    private val entries = new java.util.LinkedHashMap[String, Entry](16, 0.75f, true)
+    private[graft] val hits, misses, evictions = new java.util.concurrent.atomic.AtomicLong(0L)
+
+    def memo(df: DataFrame, params: Any = "")(compute: => V): V = {
+      val pk = planMemoKey(df)
+      if (pk.isEmpty) compute
+      else lookup(pk + "|" + params, df.sparkSession, () => compute)
+    }
+
+    @annotation.tailrec
+    private def lookup(key: String, session: org.apache.spark.sql.SparkSession,
+                       compute: () => V): V = {
+      val mine: Entry = new java.util.concurrent.CompletableFuture[Option[V]]()
+      val (prior, evicted) = entries.synchronized {
+        val p = entries.get(key)
+        if (p != null) (p, Nil)
+        else {
+          entries.put(key, mine)
+          val it = entries.values.iterator
+          var out = List.empty[Entry]
+          while (entries.size > cap) { out ::= it.next(); it.remove() }
+          (null, out)
+        }
+      }
+      // an entry evicted mid-computation is released once it completes
+      evicted.foreach { e => evictions.incrementAndGet(); e.thenAccept(_.foreach(release)) }
+      if (prior == null) { misses.incrementAndGet(); fill(key, mine, compute) }
+      else (try prior.join() catch {
+        case e: java.util.concurrent.CompletionException => throw e.getCause
+      }) match {
+        case Some(v) if frames(v).forall(_.sparkSession eq session) =>
+          hits.incrementAndGet()
+          frames(v).foreach(shared)
+          v
+        case Some(foreign) =>
+          entries.synchronized(entries.remove(key, prior))
+          release(foreign)
+          lookup(key, session, compute)
+        case None => compute() // the winner's value was not storable
+      }
+    }
+
+    private def fill(key: String, mine: Entry, compute: () => V): V = {
+      val v = try compute() catch {
+        case t: Throwable =>
+          entries.synchronized(entries.remove(key, mine))
+          mine.completeExceptionally(t)
+          throw t
+      }
+      val storable = !frames(v).exists(readsCheckpoint)
+      if (!storable) entries.synchronized(entries.remove(key, mine))
+      mine.complete(if (storable) Some(v) else None)
+      v
+    }
+
+    private def frames(v: Any): List[DataFrame] = v match {
+      case d: org.apache.spark.sql.Dataset[_] => List(d.asInstanceOf[DataFrame])
+      case (a, b) => frames(a) ::: frames(b)
+      case _ => Nil
+    }
+
+    private def release(v: V): Unit =
+      frames(v).filterNot(_.sparkSession.sparkContext.isStopped).foreach { f =>
+        try { f.unpersist(blocking = false); releaseCheckpoint(f) }
+        catch { case _: Throwable => () }
+      }
+
+    override def toString: String =
+      s"Memo($name: hits=${hits.get}, misses=${misses.get}, evictions=${evictions.get})"
+  }
+
+  private def readsCheckpoint(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirst {
+      case lr: org.apache.spark.sql.execution.LogicalRDD if lr.rdd.isCheckpointed => lr
+    }.isDefined
 }

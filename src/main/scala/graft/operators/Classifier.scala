@@ -312,8 +312,7 @@ object Classifier {
     * weights above, so a repeat invocation on an unchanged corpus skips
     * the eager percentile job entirely.
     */
-  private val thresholdMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
+  private val thresholdMemo = new Caches.Memo[Double]("medianThreshold", 16)
 
   private[graft] def medianCutLabels(docs: DataFrame,
                                      scored: DataFrame): DataFrame = {
@@ -335,24 +334,17 @@ object Classifier {
     // pass, strictly worse at scale than checkpointing the narrow
     // (doc_id, double) frame. Measured via executedPlan: 0 reused stages
     // in both lazy variants; see NOTES r12.
-    val key = Caches.planMemoKey(scored)
-    val hit = if (key.nonEmpty) thresholdMemo.get(key) else null
-    val (sc, t) =
-      if (hit != null)
-        // memo hit: no eager job — the label join reads the scored frame
-        // lazily (shared-cached so at most one materialization; for the
-        // x39b entry it is the suite-shared unigram scored frame anyway)
-        (Caches.shared(scored), hit.doubleValue())
-      else {
-        val ck = Caches.checkpointed(scored)
-        val tRow = ck.agg(expr("percentile(mean_logprob, 0.5D)")).head()
-        val t0 = if (tRow.isNullAt(0)) Double.PositiveInfinity else tRow.getDouble(0)
-        if (key.nonEmpty) {
-          if (thresholdMemo.size >= 16) thresholdMemo.clear()
-          thresholdMemo.put(key, t0)
-        }
-        (ck, t0)
-      }
+    var ck: Option[DataFrame] = None
+    val t = thresholdMemo.memo(scored) {
+      val c = Caches.checkpointed(scored)
+      ck = Some(c)
+      val tRow = c.agg(expr("percentile(mean_logprob, 0.5D)")).head()
+      if (tRow.isNullAt(0)) Double.PositiveInfinity else tRow.getDouble(0)
+    }
+    // memo hit: no eager job — the label join reads the scored frame
+    // lazily (shared-cached so at most one materialization; for the x39b
+    // entry it is the suite-shared unigram scored frame anyway)
+    val sc = ck.getOrElse(Caches.shared(scored))
     docs.select("doc_id").join(sc, Seq("doc_id"), "left_outer")
       .select(col("doc_id"),
         when(col("mean_logprob") >= t, 1.0d).otherwise(0.0d).as("y"))
@@ -370,8 +362,7 @@ object Classifier {
     * (in-memory fixtures always train), and the key folds the underlying
     * files' (name, length, mtime), so a rewritten corpus misses.
     */
-  private val weightsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Double]]()
+  private val weightsMemo = new Caches.Memo[Array[Double]]("distillWeights", 16)
 
   /** GD training-run counter (test observability, mirrors
     * [[VectorSearch.lloydRuns]]): incremented once per [[trainOnFeatures]]
@@ -396,30 +387,21 @@ object Classifier {
     // corpus fingerprint + hyperparameters identify the trained model; the
     // memo key is scoped HERE (not inside train) because train's `labels`
     // argument is caller-supplied in general
-    val key0 = Caches.planMemoKey(docs)
-    val key =
-      if (key0.nonEmpty) s"$key0|lr=$lr|it=$iters|q=$quantileLabels" else ""
-    val hit = if (key.nonEmpty) weightsMemo.get(key) else null
-    if (hit != null) {
-      // memo hit: training is skipped, so the label frame has exactly ONE
-      // consumer (the classify join) — no eager checkpoint needed
-      val labels = if (quantileLabels) lmLabelsQuantile(docs) else lmLabels(docs)
-      classifyFeatures(hashed, labels, hit)
-    } else {
+    def labels() = if (quantileLabels) lmLabelsQuantile(docs) else lmLabels(docs)
+    var trained: Option[DataFrame] = None
+    val w = weightsMemo.memo(docs, s"lr=$lr|it=$iters|q=$quantileLabels") {
       // checkpoint labels once up front: both arms read them (training
       // folds them into the doc-major frame; classify re-joins for
       // scoring). checkpointed = trivially re-plannable concrete
       // partitions; released at scope exit when the caller runs inside
       // Caches.withScope
-      val labels = Caches.checkpointed(
-        if (quantileLabels) lmLabelsQuantile(docs) else lmLabels(docs))
-      val w = trainOnFeatures(hashed, labels, docs.count().toDouble, lr, iters)
-      if (key.nonEmpty) {
-        if (weightsMemo.size >= 16) weightsMemo.clear()
-        weightsMemo.put(key, w)
-      }
-      classifyFeatures(hashed, labels, w)
+      val ck = Caches.checkpointed(labels())
+      trained = Some(ck)
+      trainOnFeatures(hashed, ck, docs.count().toDouble, lr, iters)
     }
+    // memo hit: training is skipped, so the label frame has exactly ONE
+    // consumer (the classify join) — no eager checkpoint needed
+    classifyFeatures(hashed, trained.getOrElse(labels()), w)
   }
 
   def qQualityDistill(spark: SparkSession, sfDir: String): DataFrame =

@@ -253,27 +253,16 @@ object Dedup {
     * probe job at 0.1–0.25 s per sub-second row. Env-forced arms bypass
     * the memo entirely ([[pairsArmForced]] is checked first).
     */
-  private val digestArmMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private val digestArmMemo = new Caches.Memo[Boolean]("digestArm", 32)
 
   private[graft] def digestArmUncapped(docs: DataFrame): Boolean =
-    pairsArmForced.getOrElse {
-      val key = graft.operators.Caches.planMemoKey(docs)
-      val hit = if (key.nonEmpty) digestArmMemo.get(key) else null
-      if (hit != null) hit.booleanValue()
-      else {
-        val (fams, _, _) = digestFamilies(docs)
-        val row = fams.agg(count(lit(1)), sum("fam_n")).head()
-        val nFams = row.getLong(0)
-        val nDocs = if (row.isNullAt(1)) 0L else row.getLong(1)
-        val verdict = nDocs > 0 && 1.0 - nFams.toDouble / nDocs >= 0.05
-        if (key.nonEmpty) {
-          if (digestArmMemo.size >= 32) digestArmMemo.clear()
-          digestArmMemo.put(key, verdict)
-        }
-        verdict
-      }
-    }
+    pairsArmForced.getOrElse(digestArmMemo.memo(docs) {
+      val (fams, _, _) = digestFamilies(docs)
+      val row = fams.agg(count(lit(1)), sum("fam_n")).head()
+      val nFams = row.getLong(0)
+      val nDocs = if (row.isNullAt(1)) 0L else row.getLong(1)
+      nDocs > 0 && 1.0 - nFams.toDouble / nDocs >= 0.05
+    })
 
   /** The member-level (no digest short-circuit) plan: exact mode's only
     * path, and the equality reference [[jaccardPairsDigestFirst]] is
@@ -1024,6 +1013,19 @@ object Dedup {
         Seq("id2", "tok"))
   }
 
+  /** Session memo of the dedup family table, with the components dispatch
+    * path that built it: the components label join embeds fresh driver
+    * data (union-find) per invocation, so the shared cache below never
+    * matched across calls and x45/x45c/x60/x71 each re-ran LSH +
+    * components. A hit restores [[Duplicates.lastComponentsPath]], so the
+    * flag describes the frame returned, not whatever ran last. The
+    * FORCED-distributed diagnostic (`maxCollectEdges == 0`, x45b) is
+    * deliberately NOT memoized — that row exists to run the iterative
+    * propagation per call; an iterative frame past the cap reads its
+    * checkpoint, which the memo refuses to store.
+    */
+  private val dedupFrameMemo = new Caches.Memo[(DataFrame, String)]("dedupFrame", 8)
+
   /** End-to-end MinHash dedup — the decision the candidate pairs exist to
     * feed: LSH pairs ([[minhashLshPairs]]) → single-linkage connected
     * components ([[Duplicates.componentsFromPairs]] — cost-dispatched
@@ -1039,35 +1041,16 @@ object Dedup {
     * list; nothing quadratic in the corpus, nothing driver-side beyond
     * the ≤`maxCollectEdges` fast path.
     */
-  /** Session memo of the dedup family table — the pairs-frame-memo move
-    * for the capstone: the components label join embeds fresh driver data
-    * (union-find) or fresh checkpoint RDDs (iterative) per invocation, so
-    * the shared cache below never matched across calls and x45/x45c/x60/
-    * x71 each re-ran LSH + components. The FORCED-distributed diagnostic
-    * (`maxCollectEdges == 0`, x45b) is deliberately NOT memoized — that
-    * row exists to run the iterative propagation per call.
-    */
-  private val dedupFrameMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def minhashDedup(docs: DataFrame, minEstJaccard: Double = 0.5,
                    maxBucketSize: Int = 0,
                    maxCollectEdges: Long = 5000000L,
                    digestFirst: Boolean = false): DataFrame = {
-    val key0 = graft.operators.Caches.planMemoKey(docs)
-    val key =
-      if (key0.nonEmpty && maxCollectEdges > 0L)
-        s"$key0|j=$minEstJaccard|b=$maxBucketSize|c=$maxCollectEdges|d=$digestFirst"
-      else ""
-    val hit = if (key.nonEmpty) dedupFrameMemo.get(key) else null
-    if (hit != null && (hit.sparkSession eq docs.sparkSession))
-      return Caches.shared(hit)
-    val out = minhashDedupArm(docs, minEstJaccard, maxBucketSize,
-      maxCollectEdges, digestFirst)
-    if (key.nonEmpty) {
-      if (dedupFrameMemo.size >= 8) dedupFrameMemo.clear()
-      dedupFrameMemo.put(key, out)
-    }
+    def run() = (minhashDedupArm(docs, minEstJaccard, maxBucketSize,
+      maxCollectEdges, digestFirst), Duplicates.lastComponentsPath)
+    if (maxCollectEdges <= 0L) return run()._1
+    val (out, path) = dedupFrameMemo.memo(docs,
+      s"j=$minEstJaccard|b=$maxBucketSize|c=$maxCollectEdges|d=$digestFirst")(run())
+    Duplicates.lastComponentsPath = path
     out
   }
 

@@ -84,25 +84,22 @@ object Duplicates {
       pairSimilaritiesDigestFirst(docs, threshold)
     else pairSimilaritiesMembers(docs, threshold, dfCapFraction)
 
+  /** Session memo of the shared pair frame and the TF frame it was built
+    * from, keyed by (TF-plan fingerprint, threshold, df cap). The pairs
+    * cache below serves every consumer of a corpus's edge list, but the
+    * kernel strategy's output is a `mapPartitions` over a fresh closure
+    * per invocation, which plan canonicalization treats as distinct, so
+    * CacheManager could never substitute one invocation's cache into the
+    * next. Returning the SAME DataFrame object is what makes the sharing
+    * work. The TF frame rides in the entry so that evicting a cold corpus
+    * also frees the TF cache pinned for it.
+    */
+  private[graft] val pairsFrameMemo = new Caches.Memo[(DataFrame, DataFrame)]("pairsFrame", 8)
+
   /** The member-level plan (no digest collapse): the kernel-vs-sparse
     * cost dispatch below, and the equality reference the digest-first arm
     * is spec-checked against.
     */
-  /** Session memo of the shared pair frames, keyed by (TF-plan
-    * fingerprint, threshold, df cap). The pairs cache below has always
-    * been meant to serve every consumer of a corpus's edge list — but the
-    * kernel strategy's output is a `mapPartitions` over a fresh closure
-    * per invocation, which plan canonicalization treats as distinct, so
-    * CacheManager could never substitute one invocation's cache into the
-    * next (each call silently registered a new, never-hit entry).
-    * Returning the SAME DataFrame object fixes the sharing mechanism; a
-    * hit re-registers the cache (idempotent) so a `clearCache()` between
-    * consumers degrades to a rebuild, never a stale read. Session-guarded:
-    * a frame from a stopped/foreign session misses.
-    */
-  private val pairsFrameMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private[graft] def pairSimilaritiesMembers(docs: DataFrame,
                                              threshold: Double = 0.8,
                                              dfCapFraction: Double = 1.0): DataFrame = {
@@ -110,31 +107,22 @@ object Duplicates {
     // strategy wins (the kernel alone needs two more passes over tf —
     // vocabulary and vectors — so the cache pays for itself immediately).
     val tf = Caches.shared(tfSum(docs))
-    val memoKey0 = planMemoKey(tf)
-    val memoKey =
-      if (memoKey0.nonEmpty) s"$memoKey0|t=$threshold|cap=$dfCapFraction" else ""
-    val memoHit = if (memoKey.nonEmpty) pairsFrameMemo.get(memoKey) else null
-    if (memoHit != null && (memoHit.sparkSession eq docs.sparkSession))
-      return Caches.shared(memoHit)
-    val stats = tf.agg(
-      countDistinct(col("token")).as("vocab"),
-      countDistinct(col("doc_id")).as("docs")).head()
-    val (vocabN, docsN) = (stats.getLong(0), stats.getLong(1))
-    val pairs =
-      if (vocabN > 0 && vocabN <= DenseMaxVocab && docsN * vocabN <= DenseMaxCells)
-        kernelFromTf(tf, threshold)
-      else sparseFromTf(tf, docs, threshold, dfCapFraction)
-    // The thresholded edge list is the engine's most-reused intermediate —
-    // clustering, unique-document selection and the pipeline all consume
-    // it. Persisting lets Spark's CacheManager substitute the materialized
-    // result into any later plan that canonically matches (the reference
-    // caches its IDF corpus and TF vectors for the same reason).
-    val shared = Caches.shared(pairs)
-    if (memoKey.nonEmpty) {
-      if (pairsFrameMemo.size >= 8) pairsFrameMemo.clear()
-      pairsFrameMemo.put(memoKey, shared)
-    }
-    shared
+    pairsFrameMemo.memo(tf, s"t=$threshold|cap=$dfCapFraction") {
+      val stats = tf.agg(
+        countDistinct(col("token")).as("vocab"),
+        countDistinct(col("doc_id")).as("docs")).head()
+      val (vocabN, docsN) = (stats.getLong(0), stats.getLong(1))
+      val pairs =
+        if (vocabN > 0 && vocabN <= DenseMaxVocab && docsN * vocabN <= DenseMaxCells)
+          kernelFromTf(tf, threshold)
+        else sparseFromTf(tf, docs, threshold, dfCapFraction)
+      // The thresholded edge list is the engine's most-reused intermediate —
+      // clustering, unique-document selection and the pipeline all consume
+      // it. Persisting lets Spark's CacheManager substitute the materialized
+      // result into any later plan that canonically matches (the reference
+      // caches its IDF corpus and TF vectors for the same reason).
+      (Caches.shared(pairs), tf)
+    }._1
   }
 
   /** [[pairSimilarities]]' digest-first arm (the [[Dedup]] x2/x3 move
@@ -242,43 +230,28 @@ object Duplicates {
   def pairSimilaritiesKernel(docs: DataFrame, threshold: Double = 0.8): DataFrame =
     kernelFromTf(tfSum(docs), threshold)
 
-  /** Session-scoped memo of collected [docs × vocab] matrices, keyed by the
-    * canonicalized TF plan: clustering, unique-docs and the pipeline all
-    * ask for the same corpus's matrix, and the collects happen at plan
-    * construction where DataFrame-level caching can't help. Bounded at a
-    * handful of corpora; cleared wholesale when it overflows.
+  /** Session memo of collected [docs × vocab] matrices, keyed by the TF
+    * plan: clustering, unique-docs and the pipeline all ask for the same
+    * corpus's matrix, and the collects happen at plan construction where
+    * DataFrame-level caching can't help. The arrays are never mutated.
     */
   private val kernelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Long], Array[Array[Double]], Array[Double])]()
+    new Caches.Memo[(Array[Long], Array[Array[Double]], Array[Double])]("kernelMatrix", 8)
 
-  // Memo keys come from [[Caches.planMemoKey]]: file-backed plans only,
-  // with a (name, length, mtime) fingerprint of the underlying files so an
-  // in-place parquet rewrite misses the memo instead of serving stale
-  // matrices/edges (see the Scaladoc there).
-  private def planMemoKey(df: DataFrame): String = Caches.planMemoKey(df)
-
-  private def collectMatrix(tf: DataFrame): (Array[Long], Array[Array[Double]], Array[Double]) = {
-    val spark = tf.sparkSession
-    import spark.implicits._
-    val key = planMemoKey(tf)
-    val memoizable = key.nonEmpty
-    val hit = if (memoizable) kernelMemo.get(key) else null
-    if (hit != null) return hit
-    val vocab = tf.select("token").distinct().orderBy("token").as[String].collect()
-    val rows = tf.groupBy("doc_id")
-      .agg(map_from_entries(collect_list(struct(col("token"), col("tf")))).as("m"))
-      .select(col("doc_id"),
-        transform(lit(vocab), t => coalesce(element_at(col("m"), t), lit(0.0))).as("v"))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val ids = rows.map(_._1)
-    val vecs = rows.map(_._2)
-    val norms = vecs.map(v => { var s = 0.0; var k = 0; while (k < v.length) { s += v(k) * v(k); k += 1 }; math.sqrt(s) })
-    if (memoizable) {
-      if (kernelMemo.size >= 8) kernelMemo.clear()
-      kernelMemo.put(key, (ids, vecs, norms))
+  private def collectMatrix(tf: DataFrame): (Array[Long], Array[Array[Double]], Array[Double]) =
+    kernelMemo.memo(tf) {
+      val spark = tf.sparkSession
+      import spark.implicits._
+      val vocab = tf.select("token").distinct().orderBy("token").as[String].collect()
+      val rows = tf.groupBy("doc_id")
+        .agg(map_from_entries(collect_list(struct(col("token"), col("tf")))).as("m"))
+        .select(col("doc_id"),
+          transform(lit(vocab), t => coalesce(element_at(col("m"), t), lit(0.0))).as("v"))
+        .as[(Long, Array[Double])].collect().sortBy(_._1)
+      val vecs = rows.map(_._2)
+      val norms = vecs.map(v => { var s = 0.0; var k = 0; while (k < v.length) { s += v(k) * v(k); k += 1 }; math.sqrt(s) })
+      (rows.map(_._1), vecs, norms)
     }
-    (ids, vecs, norms)
-  }
 
   private def kernelFromTf(tf: DataFrame, threshold: Double): DataFrame = {
     val spark = tf.sparkSession
@@ -321,35 +294,22 @@ object Duplicates {
     }.toDF("id1", "id2", "sim")
   }
 
-  /** N21: single-linkage clusters = connected components of the ≥ θ
-    * similarity graph.
-    *
-    * Cost-dispatched (same pattern as [[pairSimilarities]]' kernel-vs-sparse
-    * choice): the thresholded edge list is checkpointed and *counted* first.
-    * When it is small — the normal case: θ keeps the duplicate graph orders
-    * of magnitude smaller than the corpus — it is collected and union-find
-    * runs on the driver (O(E α(E))), with the label map broadcast back as a
-    * join. When a pathologically duplicate-heavy corpus produces more than
-    * `maxCollectEdges` edges, the driver is never the bottleneck: dispatch
-    * goes to the distributed min-label-propagation loop over the same
-    * checkpointed edges, so the similarity job runs exactly once either way.
-    *
-    * Output: (doc_id, component) for every document, where component is the
-    * smallest doc_id reachable through the ≥ θ similarity graph.
-    */
-  /** Session-scoped memo of collected edge lists, keyed by (corpus plan,
-    * threshold): clustering, unique-docs, and both pipeline entries all
-    * collect the same thresholded pairs, and the small-graph path brings the
-    * edge list to the driver by design — memoizing the collected array just
-    * skips re-running the similarity job for the later consumers.
-    */
-  private val edgeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long)]]()
-
   /** Which path the last [[components]] call dispatched to ("collect" |
     * "iterative") — observability hook for the dispatch spec.
     */
   @volatile private[graft] var lastComponentsPath: String = ""
+
+  /** Session memo of the expanded component-label frames with the
+    * dispatch path that built them: the collect arm's label join embeds a
+    * fresh driver-data LocalRelation per invocation, which plan
+    * canonicalization treats as distinct, so without it the n10/n11/
+    * p-family consumers each re-ran the similarity job and the expansion.
+    * A hit restores [[lastComponentsPath]]. Keyed by (corpus fingerprint,
+    * threshold, collect cap) — the cap changes which arm builds the frame,
+    * and an explicit cap is a dispatch request. Iterative frames read
+    * their label checkpoint, so the memo does not store them.
+    */
+  private[graft] val labelsFrameMemo = new Caches.Memo[(DataFrame, String)]("labelsFrame", 8)
 
   /** N20/N21: single-linkage duplicate clusters, digest-first. A
     * duplicate-heavy corpus is what this operator exists for, and there
@@ -374,74 +334,42 @@ object Duplicates {
     * rides the rep's termCounts presence, not the digest alone. Component
     * labels agree because every family's minimum id IS its
     * representative, so min-over-members ≡ min-over-reps.
+    *
+    * Cost-dispatched (same pattern as [[pairSimilarities]]' kernel-vs-sparse
+    * choice): the thresholded edge list is checkpointed and *counted* first.
+    * When it is small — the normal case: θ keeps the duplicate graph orders
+    * of magnitude smaller than the corpus — it is collected and union-find
+    * runs on the driver (O(E α(E))), with the label map broadcast back as a
+    * join. When a pathologically duplicate-heavy corpus produces more than
+    * `maxCollectEdges` edges, the driver is never the bottleneck: dispatch
+    * goes to the distributed min-label-propagation loop over the same
+    * checkpointed edges, so the similarity job runs exactly once either way.
+    *
+    * Output: (doc_id, component) for every document, where component is the
+    * smallest doc_id reachable through the ≥ θ similarity graph.
     */
-  /** Session memo of the expanded component-label frames — the
-    * [[pairsFrameMemo]] move for [[components]]: the collect arm's label
-    * join embeds a fresh driver-data LocalRelation per invocation, which
-    * plan canonicalization treats as distinct, so the n10/n11/p-family
-    * consumers each re-ran the full expansion even with the EDGE list
-    * memoized. A hit returns the same DataFrame (re-registered in the
-    * cache) and restores the dispatch-path flag the specs observe. Keyed
-    * by (corpus fingerprint, threshold, collect cap) — the cap changes
-    * which arm builds the frame, and an explicit cap is a dispatch
-    * request, so capped and uncapped frames memoize separately.
-    */
-  private val labelsFrameMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, String)]()
-
   def components(docs: DataFrame, threshold: Double = 0.8,
                  maxCollectEdges: Long = 5000000L): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val key0 = planMemoKey(docs)
-    // v2: the memo holds REP-level edges (digest-first), not member edges
-    val key = if (key0.nonEmpty) s"$key0|t=$threshold|v2" else ""
-    val frameKey = if (key.nonEmpty) s"$key|cap=$maxCollectEdges" else ""
-    val frameHit = if (frameKey.nonEmpty) labelsFrameMemo.get(frameKey) else null
-    if (frameHit != null && (frameHit._1.sparkSession eq docs.sparkSession)) {
-      lastComponentsPath = frameHit._2
-      return Caches.shared(frameHit._1)
+    val (labels, path) = labelsFrameMemo.memo(docs, s"t=$threshold|cap=$maxCollectEdges") {
+      val spark = docs.sparkSession
+      import spark.implicits._
+      val (_, members, repDocs) = Dedup.digestFamilies(docs)
+      // repDocs are already digest-collapsed — call the member arm directly
+      // rather than re-probing dup mass over the rep corpus
+      val pairs = Caches.checkpointed(pairSimilaritiesMembers(repDocs, threshold)
+        .select(col("id1").cast("long").as("id1"), col("id2").cast("long").as("id2")))
+      val collect = pairs.count() <= maxCollectEdges
+      val repLabels =
+        if (collect) unionFindLabels(repDocs, pairs.as[(Long, Long)].collect())
+        else propagateMinLabels(repDocs, pairs)
+      val result = Caches.shared(expandRepLabels(docs, members, repDocs, repLabels))
+      // both arms are concrete past this point (collected edge list /
+      // checkpointed label frame) — the pair checkpoint can go now
+      Caches.releaseCheckpoint(pairs)
+      (result, if (collect) "collect" else "iterative")
     }
-    val (_, members, repDocs) = Dedup.digestFamilies(docs)
-    val hit = if (key.nonEmpty) edgeMemo.get(key) else null
-    // honor the caller's cap even on a memo hit: an explicit small cap is
-    // a request to avoid the driver path, not just a cost heuristic
-    if (hit != null && hit.length <= maxCollectEdges) {
-      lastComponentsPath = "collect"
-      val expanded = Caches.shared(
-        expandRepLabels(docs, members, repDocs, unionFindLabels(repDocs, hit)))
-      if (frameKey.nonEmpty) {
-        if (labelsFrameMemo.size >= 8) labelsFrameMemo.clear()
-        labelsFrameMemo.put(frameKey, (expanded, lastComponentsPath))
-      }
-      return expanded
-    }
-    // repDocs are already digest-collapsed — call the member arm directly
-    // rather than re-probing dup mass over the rep corpus
-    val pairs = Caches.checkpointed(pairSimilaritiesMembers(repDocs, threshold)
-      .select(col("id1").cast("long").as("id1"), col("id2").cast("long").as("id2")))
-    val repLabels =
-      if (pairs.count() <= maxCollectEdges) {
-        lastComponentsPath = "collect"
-        val edges = pairs.as[(Long, Long)].collect()
-        if (key.nonEmpty) {
-          if (edgeMemo.size >= 8) edgeMemo.clear()
-          edgeMemo.put(key, edges)
-        }
-        unionFindLabels(repDocs, edges)
-      } else {
-        lastComponentsPath = "iterative"
-        propagateMinLabels(repDocs, pairs)
-      }
-    val result = Caches.shared(expandRepLabels(docs, members, repDocs, repLabels))
-    if (frameKey.nonEmpty) {
-      if (labelsFrameMemo.size >= 8) labelsFrameMemo.clear()
-      labelsFrameMemo.put(frameKey, (result, lastComponentsPath))
-    }
-    // both arms are concrete past this point (collected edge list /
-    // checkpointed label frame) — the pair checkpoint can go now
-    Caches.releaseCheckpoint(pairs)
-    result
+    lastComponentsPath = path
+    labels
   }
 
   /** Propagate representative component labels to every family member.

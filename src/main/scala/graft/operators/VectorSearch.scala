@@ -140,27 +140,16 @@ object VectorSearch {
     * (r13 VERDICT finding #2: 0.1–0.25 s on every sub-second x-vec row)
     * runs once per corpus fingerprint. Env-forced arms bypass the memo.
     */
-  private val embArmMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private val embArmMemo = new Caches.Memo[Boolean]("embDigestArm", 32)
 
   private[graft] def embDigestArm(embeddings: DataFrame): Boolean =
-    Dedup.pairsArmForced.getOrElse {
-      val key = Caches.planMemoKey(embeddings)
-      val hit = if (key.nonEmpty) embArmMemo.get(key) else null
-      if (hit != null) hit.booleanValue()
-      else {
-        val (fams, _, _) = embFamilies(embeddings)
-        val row = fams.agg(count(lit(1)), sum("fam_n")).head()
-        val nFams = row.getLong(0)
-        val nVecs = if (row.isNullAt(1)) 0L else row.getLong(1)
-        val verdict = nVecs > 0 && 1.0 - nFams.toDouble / nVecs >= 0.05
-        if (key.nonEmpty) {
-          if (embArmMemo.size >= 32) embArmMemo.clear()
-          embArmMemo.put(key, verdict)
-        }
-        verdict
-      }
-    }
+    Dedup.pairsArmForced.getOrElse(embArmMemo.memo(embeddings) {
+      val (fams, _, _) = embFamilies(embeddings)
+      val row = fams.agg(count(lit(1)), sum("fam_n")).head()
+      val nFams = row.getLong(0)
+      val nVecs = if (row.isNullAt(1)) 0L else row.getLong(1)
+      nVecs > 0 && 1.0 - nFams.toDouble / nVecs >= 0.05
+    })
 
   /** [[nearDuplicatePairsBlocked]]'s digest-first arm (the n6 r12 move in
     * vector space): the blocked O(n²·d) kernel runs on unique vectors
@@ -368,24 +357,14 @@ object VectorSearch {
     * empty key and always train), and the key folds the underlying files'
     * (name, length, mtime), so a rewritten corpus misses.
     */
-  private val centroidMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
-  private val pqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Seq[Seq[Seq[Double]]])]()
+  private val centroidMemo = new Caches.Memo[Array[Array[Double]]]("kmeansCentroids", 16)
+  private val pqMemo = new Caches.Memo[(Int, Seq[Seq[Seq[Double]]])]("pqCodebooks", 16)
 
+  /** Callers get a copy: the memoized arrays are mutable. */
   def kmeansCentroids(embeddings: DataFrame, k: Int = 16,
-                      iters: Int = 5): Array[Array[Double]] = {
-    val key0 = Caches.planMemoKey(embeddings)
-    val key = if (key0.nonEmpty) s"$key0|k=$k|it=$iters" else ""
-    val hit = if (key.nonEmpty) centroidMemo.get(key) else null
-    if (hit != null) return hit.map(_.clone())
-    val trained = kmeansCentroidsTrain(embeddings, k, iters)
-    if (key.nonEmpty) {
-      if (centroidMemo.size >= 16) centroidMemo.clear()
-      centroidMemo.put(key, trained.map(_.clone()))
-    }
-    trained
-  }
+                      iters: Int = 5): Array[Array[Double]] =
+    centroidMemo.memo(embeddings, s"k=$k|it=$iters")(
+      kmeansCentroidsTrain(embeddings, k, iters)).map(_.clone())
 
   private def kmeansCentroidsTrain(embeddings: DataFrame, k: Int,
                                    iters: Int): Array[Array[Double]] = {
@@ -1014,16 +993,7 @@ object VectorSearch {
                              iters: Int): (Int, Seq[Seq[Seq[Double]]]) = {
     // same model memo as [[kmeansCentroids]] (books are immutable Seqs —
     // no defensive copy needed)
-    val key0 = Caches.planMemoKey(embeddings)
-    val key = if (key0.nonEmpty) s"$key0|m=$m|k=$k|it=$iters" else ""
-    val hit = if (key.nonEmpty) pqMemo.get(key) else null
-    if (hit != null) return hit
-    val trained = pqTrainRun(embeddings, m, k, iters)
-    if (key.nonEmpty) {
-      if (pqMemo.size >= 16) pqMemo.clear()
-      pqMemo.put(key, trained)
-    }
-    trained
+    pqMemo.memo(embeddings, s"m=$m|k=$k|it=$iters")(pqTrainRun(embeddings, m, k, iters))
   }
 
   private def pqTrainRun(embeddings: DataFrame, m: Int, k: Int,
