@@ -1,80 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  /** Cache-sharing cohorts inside the 60+-query x family. Lexicographic
-    * name order interleaves unrelated sub-groups (x2_jaccard lands after
-    * x20..x29) and lets every sub-group's cached frames stay live for the
-    * whole family, so the late-alphabet dedup queries pay the session's
-    * accumulated memory/GC pressure — BENCH_r05 showed x33 at 7.35 s in
-    * the sweep vs 1.64 s solo, same plan. Grouping by the frames a query
-    * actually shares (the Dedup shingle/signature frames, the VectorSearch
-    * embedding/centroid frames, the TextQuality termCounts frame, ...) and
-    * clearing the SQL cache at cohort boundaries keeps reuse where it is
-    * real and drops it where it is only history.
-    */
-  private val xCohorts: Map[String, String] = {
-    val groups = Map(
-      "x-dedup" -> Seq("x1_exact_digest", "x2_jaccard_pairs", "x2b_jaccard_capped",
-        "x3_minhash_lsh", "x3b_minhash_lsh_capped", "x4_simhash_pairs",
-        "x33_dup_spans", "x36_containment", "x36b_containment_capped",
-        "x45_minhash_dedup", "x45b_minhash_dedup_iter",
-        "x45c_minhash_dedup_digest", "x60_dedup_report",
-        "x63_quality_keep", "x64_exact_substr", "x65_dup_span_stats",
-        "x77_substr_decontaminate", "x89_remove_dup_spans",
-        "x90_span_stats_persisted",
-        "x66_incremental_dedup", "x67_novelty_curve",
-        "x70_incremental_persisted", "x71_family_sizes",
-        "x76_minhash_calibration", "x78_lsh_bucket_stats"),
-      "x-vec" -> Seq("x5_ann_topk", "x6_emb_near_dups", "x7_ann_lsh",
-        "x8_centroid_norms", "x14_ann_ivf", "x15_quantized", "x26_knn_join",
-        "x30_semantic_dedup", "x37_ivf_knn_join", "x38_ann_recall",
-        "x50_pq_codes", "x51_pq_adc_topk", "x52_ivfpq_topk",
-        "x55_cluster_topics", "x57_hard_negatives", "x68_ivf_cell_stats",
-        "x82_ivf_persisted", "x83_ivfpq_persisted",
-        "x82b_ivf_probe", "x83b_ivfpq_probe", "x86_semantic_decontam",
-        "x86b_semantic_decontam_ivf", "x86c_semantic_decontam_probe",
-        "x88_pq_refine"),
-      "x-quality" -> Seq("x9_lang_id", "x10_quality", "x11_token_counts",
-        "x12_fingerprints", "x13_domain_stats", "x16_repetition",
-        "x17_redact_pii", "x18_chunks", "x22_c4_filter", "x23_gopher_rules",
-        "x25_unigram_lm", "x27_ngram_rep", "x29_line_dedup",
-        "x31_ccnet_buckets", "x39_quality_distill", "x39b_quality_distill_aq",
-        "x40_normalize",
-        "x43_bigram_lm", "x56_kmv_distinct", "x58_source_overlap",
-        "x59_interp_bigram", "x69_source_drift", "x79_worst_spans",
-        "x81_term_zipf"),
-      "x-prep" -> Seq("x19_decontaminate", "x20_split", "x21_packing",
-        "x24_mix_sources", "x28_crossdoc_dup", "x32_token_budget",
-        "x34_decontaminate_bloom", "x35_mix_temperature", "x42_weighted_sample",
-        "x49_split_novelty", "x53_dsir_weights", "x54_dsir_sample",
-        "x62_packing_efficiency", "x84_corpus_diff", "x85_corpus_manifest",
-        "x87_training_order"),
-      "x-retrieval" -> Seq("x41_phrase_search", "x41b_phrase_probe",
-        "x44_hybrid_search", "x44b_hybrid_probe",
-        "x46_bpe_merges", "x47_rag_retrieve", "x48_bpe_segment", "x61_prf_bm25",
-        "x72_wp_vocab", "x73_wp_segment", "x74_unigram_viterbi",
-        "x75_tokenizer_report", "x80_unigram_em"))
-    for ((cohort, names) <- groups; n <- names) yield n -> cohort
-  }
-
-  private[graft] def cohortOf(name: String): String =
-    xCohorts.getOrElse(name, name.takeWhile(_.isLetter))
-
-  /** Rows whose query entry REPLAYS a stream to completion on every call
-    * (readStream → sink → processAllAvailable). For these the cold/warm
-    * decomposition does not apply: the "warm" sweep re-consumes the whole
-    * stream again — there is no materialized frame to be warm OVER — so
-    * warm ≈ cold up to noise and warm > cold carries no meaning. The set
-    * is emitted as `"replay"` in the cohort JSONL and the sidecar so the
-    * artifact explains itself, and these rows are EXCLUDED from the
-    * cohort_build (cold − warm) sums, which would otherwise absorb replay
-    * noise as phantom build cost.
-    */
-  private[graft] val replayRows: Set[String] = Set(
-    "w8_stream_daily", "w9_stream_enriched", "w11_stream_quality",
-    "w12_neardup_admission", "w13_kmv_stream",
-    "w14_substr_decontam_stream", "w15_incremental_admission")
-
   /** Execute a query's OWN physical plan and materialize every output
     * row. `df.count()` plans a count-aggregate OVER the query, and column
     * pruning then deletes any per-row projection nothing references — a
@@ -91,25 +17,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // static conf: the default 100-entry LRU evicts generated classes
-      // shared across the 100+ suite queries, forcing Janino recompiles;
-      // size it to the suite so each distinct stage compiles once
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    // Dev-only A/B knob (unset in driver runs): "k=v;k=v" session confs.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => builder.config(k.trim, v)
-        case _ if kv.trim.isEmpty           => ()
-        case _ => System.err.println(s"ignoring malformed SPARK_GRAFT_EXTRA_CONF entry: '$kv'")
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     // untimed warmup: session/codegen/parquet-footer costs land here, not
     // in the first measured query that happens to touch each table
     for (t <- Seq("region", "nation", "customer", "supplier", "part", "orders",
@@ -138,6 +46,8 @@ object Bench {
     // shingle frame feeds x2/x3/x4), so every CacheManager-deduped
     // intermediate is built once by its first consumer instead of
     // whichever query the map iterator happened to yield first.
+    val cohortOf = SparkEntry.registry.map(q => q.name -> q.cohort).toMap
+    val replayRows = SparkEntry.tagged(QuerySpec.Replay).toSet
     val selected = SparkEntry.queries.toSeq
       .sortBy { case (name, _) => (cohortOf(name), name) }
       .filter { case (name, _) => only.forall(_.contains(name)) && !exclude(name) }
@@ -184,14 +94,14 @@ object Bench {
     // JSON (`memo_warmed`) so cross-round total comparisons aren't
     // misread as a training speedup.
     val memoWarmed =
-      Seq("n10_components", "x46_bpe_merges").filter(n => only.forall(_.contains(n)))
+      SparkEntry.tagged(QuerySpec.MemoWarm).filter(n => only.forall(_.contains(n)))
     if (warmDir.nonEmpty)
       for (name <- memoWarmed; fn <- SparkEntry.queries.get(name)) {
         try { execRows(fn(spark, sfDir)) } catch { case _: Throwable => () }
         spark.catalog.clearCache()
       }
     // Session hygiene: clear the SQL cache at COHORT boundaries (letter
-    // prefix for most families; the explicit xCohorts sub-groups inside
+    // prefix for most families; the registry's x sub-cohorts inside
     // the x family). Cohorts share cached intermediates by design (the
     // Dedup shingle frame feeds x2/x3/x4), but letting every cohort's
     // frames accumulate for the whole 160+-query session taxes the late
@@ -427,7 +337,7 @@ object Bench {
     // `pass_totals_cold` — the round-9 names (total_min / pass_totals)
     // measured different quantities and are retired, not silently reused
     // replay rows present in this run, so the sidecar carries its own
-    // warm-semantics caveat (see `replayRows`)
+    // warm-semantics caveat (see `QuerySpec.Replay`)
     val replayJson = selected.map(_._1).filter(replayRows)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     val perQueryLine =

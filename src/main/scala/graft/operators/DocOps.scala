@@ -178,14 +178,6 @@ object DocOps {
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"), col("rk"))
   }
 
-  /** Seeded-RNG sample variant (`orderBy(rand(seed))` — the literal Spark
-    * translation of `ORDER BY RANDOM()`); kept for API parity, not
-    * oracle-checkable because RNG streams differ across engines.
-    */
-  def randomSampleSeeded(spark: SparkSession, sfDir: String, n: Int = 50,
-                         seed: Long = 42L): DataFrame =
-    Tables.documents(spark, sfDir).orderBy(rand(seed)).limit(n)
-
   /** Topic CASE-bucket aggregation (A16): per language, the number of
     * documents mentioning each topic (substring semantics like the
     * reference's LIKE chains) plus totals.

@@ -156,6 +156,37 @@ class MemoSpec extends SparkSpec {
     assert(VectorSearch.lloydRuns.get() == before + 1)
   }
 
+  test("concurrent callers on two corpora train each once, with no cross-talk") {
+    val all = Tables.embeddings(spark, sf0001)
+    // each corpus in two directories with the same rows: the memo key
+    // carries the path, so the concurrent run cannot hit the solo run's entry
+    val corpora = Seq(all, all.where($"vec_id" % 2 === 1)).map { df =>
+      Seq("solo", "concurrent").map { tag =>
+        val dir = tmpDir(s"memo-kmeans-$tag")
+        df.repartition(1).write.parquet(s"$dir/embeddings.parquet")
+        dir
+      }
+    }
+    def train(dir: String): Seq[Seq[Double]] =
+      VectorSearch.kmeansCentroids(Tables.embeddings(spark, dir), k = 4, iters = 2)
+        .map(_.toSeq).toSeq
+    val solo = corpora.map(dirs => train(dirs.head))
+    assert(solo(0) != solo(1), "the two corpora must train different centroids")
+    val before = VectorSearch.lloydRuns.get()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val calls = corpora.map { dirs =>
+        pool.submit(new java.util.concurrent.Callable[Seq[Seq[Double]]] {
+          def call(): Seq[Seq[Double]] = { start.await(); train(dirs(1)) }
+        })
+      }
+      start.countDown()
+      assert(calls.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS)) == solo)
+    } finally pool.shutdown()
+    assert(VectorSearch.lloydRuns.get() == before + 2)
+  }
+
   test("operators declare no memo map outside Caches.scala") {
     val dir = new java.io.File("src/main/scala/graft/operators")
     assert(dir.isDirectory, s"run from the repository root: ${dir.getAbsolutePath}")
